@@ -24,7 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 N_CLIPS = int(os.environ.get("SPARK_GRAFT_CLIPS", "320000"))
 # realistic ASR-utterance clips (0.96-2.88s) so the Arrow PCM decode — the
 # embarrassingly-parallel per-clip work — dominates the fixed per-job

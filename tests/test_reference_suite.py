@@ -96,7 +96,8 @@ def _collect():
     return cases
 
 
-_CASES = _collect()
+# the module-level skip does not stop collection from importing this file
+_CASES = _collect() if os.path.exists(REF_TESTS) else []
 
 
 @pytest.fixture()

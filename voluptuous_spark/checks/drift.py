@@ -16,10 +16,13 @@ Scale strategy:
   so the single-partition window is bounded by value cardinality. For
   unbounded-cardinality columns use ``ks_statistic(..., grid=M)`` which
   evaluates CDFs on an M-point approx-quantile grid (constant memory).
-- Everything here is LAZY — no driver-side .count()/.collect(). Ratios
+- PSI and grid KS are LAZY — no driver-side .count()/.collect(). Ratios
   and totals come from windows over the already-aggregated (tiny) tables,
-  so each check is ONE Spark job when an action finally runs, and several
-  checks can be submitted concurrently from threads.
+  so each check is ONE action when it finally runs, and several checks
+  can be submitted concurrently from threads.
+- Exact KS issues ONE eager job while the plan is built: the range-bound
+  sample of ``partitioning.with_range_offsets``. Bucket offsets and the
+  two sides' totals are computed inside the returned plan.
 """
 
 from __future__ import annotations
@@ -100,9 +103,10 @@ def ks_statistic(
     """Two-sample Kolmogorov–Smirnov statistic, single row (ks_stat).
 
     Exact mode (grid=None): group both sides by value, cumulative counts
-    over the distinct-value table, ks = max |CDF_a - CDF_b|. The window
-    sorts only |distinct| rows; totals come from a second window over the
-    same tiny table (no eager collect).
+    over the distinct-value table, ks = max |CDF_a - CDF_b|. The cumsum
+    runs per range bucket (``_ordered_cumsum``); bucket offsets and the
+    totals are computed in the plan, after one eager bounds sample. NULL
+    when either side has no non-null value.
 
     Grid mode: evaluate both empirical CDFs on an approx-quantile grid of
     the union — bounded memory for continuous columns at any scale.
@@ -145,14 +149,12 @@ def ks_statistic(
         F.coalesce("ca", F.lit(0)).alias("ca"),
         F.coalesce("cb", F.lit(0)).alias("cb"),
     )
-    cum, na, nb = _ordered_cumsum(merged, "v", ("ca", "cb"))
-    if na == 0 or nb == 0:
-        return merged.sparkSession.createDataFrame(
-            [(None,)], "ks_stat double"
-        )
+    cum = _ordered_cumsum(merged, "v", ("ca", "cb"))
+    na, nb = F.col("tot_ca"), F.col("tot_cb")
     return cum.select(
-        F.abs(
-            F.col("cum_ca") / F.lit(na) - F.col("cum_cb") / F.lit(nb)
+        F.when(
+            (na > 0) & (nb > 0),
+            F.abs(F.col("cum_ca") / na - F.col("cum_cb") / nb),
         ).alias("d")
     ).agg(F.max("d").alias("ks_stat"))
 
@@ -161,38 +163,22 @@ def _ordered_cumsum(df, order_col: str, sum_cols, buckets: int = 64):
     """Cumulative sums by ascending ``order_col`` WITHOUT a global-order
     window (``Window.orderBy`` with no partition key funnels every distinct
     value through one task — fatal for an ECDF over a 10^12-row column).
-    Bucket by DETERMINISTIC literal range bounds (``partitioning`` — a
-    hash-ordered sample collected once to the driver), cumsum locally per
-    bucket, add per-bucket offsets from a tiny driver-side pass over
-    ``buckets`` partial sums. Returns
-    (df + cum_<col> columns, total_0, total_1, ...) — totals come free
-    from the offsets job. The bucket id is a pure literal expression, so
-    the offsets job and the consuming job agree by construction — no
-    cache (the old repartitionByRange form cached the frame for bound
-    consistency and never released it: a leak in a long-lived session)."""
-    from ..partitioning import range_pid_expr, sample_range_bounds
+    Bucket by DETERMINISTIC literal range bounds, cumsum locally per
+    bucket, and add the bucket's offset (``partitioning.with_range_offsets``:
+    one eager bounds sample, offsets computed in the plan). Returns ``df``
+    + ``cum_<col>`` and ``tot_<col>`` (the column total) for each of
+    ``sum_cols``. Nothing is cached: every job derives the same bucket
+    from the same literal bounds."""
+    from ..partitioning import PID, with_range_offsets
 
-    bounds = sample_range_bounds(df, order_col, buckets)
-    d = df.withColumn("__pid", range_pid_expr(F.col(order_col), bounds))
-    part = sorted(
-        (r["__pid"], r)
-        for r in d.groupBy("__pid").agg(
-            *[F.sum(c).alias(c) for c in sum_cols]
-        ).collect()
+    d = with_range_offsets(
+        df, order_col, {c: F.sum(c) for c in sum_cols}, buckets
     )
-    offs = {c: {} for c in sum_cols}
-    acc = {c: 0 for c in sum_cols}
-    for pid, r in part:
-        for c in sum_cols:
-            offs[c][pid] = acc[c]
-            acc[c] += r[c] or 0
-    w = Window.partitionBy("__pid").orderBy(order_col).rowsBetween(
+    w = Window.partitionBy(PID).orderBy(order_col).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    out = d
-    for c in sum_cols:
-        m = F.create_map(
-            *[F.lit(v) for kv in sorted(offs[c].items()) for v in kv]
-        ) if offs[c] else F.create_map()
-        out = out.withColumn(f"cum_{c}", F.sum(c).over(w) + m[F.col("__pid")])
-    return (out, *[acc[c] for c in sum_cols])
+    return d.select(
+        "*",
+        *[(F.sum(c).over(w) + F.col(f"off_{c}")).alias(f"cum_{c}")
+          for c in sum_cols],
+    )

@@ -15,12 +15,17 @@ sort, no shuffle of the corpus) collected once to the driver, cut at
 even quantiles, and re-applied as a pure literal Column expression.
 Every job computes the same bucket for the same row from literals, so
 there is nothing to cache and nothing to leak.
+
+``with_range_offsets`` is what the ordered-scan helpers call: the bounds
+sample is its only eager job; bucket offsets are computed in the plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+PID = "__pid"
 
 
 def sample_range_bounds(
@@ -68,3 +73,31 @@ def range_pid_expr(col, bounds: list):
         t = (col > F.lit(b)).cast("int")
         e = t if e is None else e + t
     return F.coalesce(e, F.lit(0))
+
+
+def with_range_offsets(
+    df: DataFrame, col: str, aggs: dict[str, Column], buckets: int = 64
+) -> DataFrame:
+    """``df`` plus the bucket id ``__pid`` of ``col`` (bounds from one
+    eager ``sample_range_bounds`` job) and, for each ``name -> aggregate``
+    in ``aggs``, ``off_<name>`` (the sum over all LOWER buckets; add a
+    per-bucket running value to get the global one) and ``tot_<name>``
+    (the sum over all buckets). Both come from the per-bucket aggregate,
+    at most ``buckets`` rows, so its running sum is a single-partition
+    window over kilobytes, broadcast back on ``__pid``. Data-dependent
+    offsets never become literals, so generated code stays reusable.
+    An empty ``df`` gives an empty frame."""
+    d = df.withColumn(
+        PID, range_pid_expr(F.col(col), sample_range_bounds(df, col, buckets))
+    )
+    below = Window.orderBy(PID).rowsBetween(Window.unboundedPreceding, -1)
+    every = Window.partitionBy()
+    offsets = d.groupBy(PID).agg(
+        *[e.alias(n) for n, e in aggs.items()]
+    ).select(
+        PID,
+        *[F.coalesce(F.sum(n).over(below), F.lit(0)).alias(f"off_{n}")
+          for n in aggs],
+        *[F.sum(n).over(every).alias(f"tot_{n}") for n in aggs],
+    )
+    return d.join(F.broadcast(offsets), PID)

@@ -161,6 +161,79 @@ class ValidationResult:
         )
 
 
+_VIOL_ARR_T = (
+    "array<struct<path:array<string>,message:string,"
+    "error_type:string,offending:string,ctx:string>>"
+)
+
+
+class _CompiledTable:
+    """A table Schema compiled against one input schema: unbound Columns
+    only, so one instance serves every DataFrame of that schema in its
+    session. ``bind`` splices the caller's extra checks into the errors
+    array between ``head`` (field, group-member and complex-required
+    entries) and ``tail`` (extra-key entries, then map-entry arrays; a
+    root-level Any's one branch array) — the order a fresh compile
+    would give them."""
+
+    def __init__(self, stage1, kept, out_names, fail_any, empty, head=(),
+                 tail=(), first_incl=None, excl_arr=None):
+        self.stage1, self.kept, self.out_names = stage1, kept, out_names
+        self.fail_any, self.empty = fail_any, empty
+        self.head, self.tail = list(head), list(tail)
+        self.first_incl, self.excl_arr = first_incl, excl_arr
+        self._plain_errors = None  # the errors array with no extra checks
+
+    def _errors(self, extra: list) -> Column:
+        # Lambda-free assembly: array_compact/array_sort compile to
+        # higher-order functions whose lambda bodies force the ENTIRE
+        # projection out of whole-stage codegen (measured: 3-5s of
+        # interpreted per-row lambda eval on a 600k-row validate).
+        # concat of conditional singleton arrays stays inside codegen;
+        # error order = schema declaration order, which is exactly the
+        # reference's accumulation order (schema_builder.py:360-377).
+        parts = self.head + extra + self.tail
+        errors = F.concat(*parts) if parts else self.empty
+        # group-check precedence (schema_builder.py:530-571): any
+        # exclusive error preempts everything; else the first inclusive
+        # error preempts mapping errors; else fall through
+        if self.first_incl is not None:
+            errors = F.when(
+                self.first_incl.isNotNull(),
+                F.array(self.first_incl).cast(_VIOL_ARR_T),
+            ).otherwise(errors)
+        if self.excl_arr is not None:
+            errors = F.when(
+                F.size(self.excl_arr) > 0, self.excl_arr
+            ).otherwise(errors)
+        return errors
+
+    def bind(self, df: DataFrame, id_cols, extra_checks) -> ValidationResult:
+        fail_any, extra = self.fail_any, []
+        if not extra_checks:
+            if self._plain_errors is None:
+                self._plain_errors = self._errors([])
+            errors = self._plain_errors
+        else:
+            # multi-column content checks (Arrow-batch validators)
+            for chk in extra_checks:
+                label, msg_col = chk[0], chk[1]
+                etype = chk[2] if len(chk) > 2 else "ValueInvalid"
+                en = _violation((label,), msg_col, etype, F.lit("None"),
+                                msg_col.isNotNull())
+                extra.append(
+                    F.when(en.isNotNull(), F.array(en)).otherwise(self.empty)
+                )
+                fail_any = fail_any | en.isNotNull()
+            errors = self._errors(extra)
+        staged = df.select(*self.stage1)
+        return ValidationResult(
+            staged.select(*self.kept, errors.alias("__errors")),
+            list(id_cols), list(self.out_names),
+            staged.filter(~fail_any).select(*self.kept),
+        )
+
+
 class Schema:
     """Compile a voluptuous-style dict schema against DataFrame columns.
 
@@ -1157,53 +1230,41 @@ class Schema:
                 "documents via Schema.__call__, or use compile_validator "
                 "for single columns"
             )
+        # keyed on what the schema compiles against; the caller's extra
+        # checks are spliced in per call (their Columns may hold binary
+        # literals whose repr is a JVM identity hash, new every call)
         memo_key = (
             id(df.sparkSession),  # compiled Columns are session-scoped
             df.schema.simpleString(),
             tuple(id_cols),
-            tuple(
-                (c[0], repr(c[1]), c[2] if len(c) > 2 else "ValueInvalid")
-                for c in extra_checks
-            ),
         )
-        cached = self._compiled_cache.get(memo_key)
-        if cached is not None:
-            stage1, selection, out_names, fail_any, valid_sel = cached
-            annotated = df.select(*stage1).select(*selection)
-            valid_df = df.select(*stage1).filter(~fail_any).select(*valid_sel)
-            return ValidationResult(
-                annotated, list(id_cols), out_names, valid_df
-            )
+        compiled = self._compiled_cache.get(memo_key)
+        if compiled is None:
+            compiled = self._compile_table(df, id_cols)
+            self._compiled_cache[memo_key] = compiled
+        return compiled.bind(df, id_cols, extra_checks)
 
+    def _compile_table(self, df: DataFrame, id_cols) -> "_CompiledTable":
+        """The unbound Columns ``validate`` memoizes per (session, input
+        schema, id_cols)."""
         if isinstance(self.schema, dsl.Any):
             # root-level Any over mapping branches: wrap the row in one
             # struct and reuse the dict-branch machinery (identity output;
             # deepest-error branch's violations on reject)
-            viol_arr_t = (
-                "array<struct<path:array<string>,message:string,"
-                "error_type:string,offending:string,ctx:string>>"
-            )
             row_struct = F.struct(
                 *[_fcol(c).alias(c) for c in df.columns])
             arr = self._any_dict_branches(
                 self.schema, row_struct, df.schema, ()
-            ).cast(viol_arr_t)
-            empty = F.array().cast(viol_arr_t)
-            stage1 = [F.col("*"),
-                      F.coalesce(arr, empty).alias("__ea_root")]
-            selection = [F.col("*")]
-            selection[0:1] = [_fcol(c).alias(c) for c in df.columns]
-            selection.append(F.col("__ea_root").alias("__errors"))
-            fail_any = F.size(F.col("__ea_root")) > 0
-            valid_sel = [_fcol(c).alias(c) for c in df.columns]
-            out_names = list(df.columns)
-            self._compiled_cache[memo_key] = (
-                stage1, selection, out_names, fail_any, valid_sel,
-            )
-            annotated = df.select(*stage1).select(*selection)
-            valid_df = df.select(*stage1).filter(~fail_any).select(*valid_sel)
-            return ValidationResult(
-                annotated, list(id_cols), out_names, valid_df
+            ).cast(_VIOL_ARR_T)
+            empty = F.array().cast(_VIOL_ARR_T)
+            return _CompiledTable(
+                stage1=[F.col("*"),
+                        F.coalesce(arr, empty).alias("__ea_root")],
+                kept=[_fcol(c).alias(c) for c in df.columns],
+                out_names=list(df.columns),
+                fail_any=F.size(F.col("__ea_root")) > 0,
+                empty=empty,
+                tail=[F.col("__ea_root")],
             )
 
         fields, declared, complex_req = self._bind_fields(df.schema)
@@ -1398,11 +1459,7 @@ class Schema:
                 # the sequence compiler; stages run in order, first
                 # failing stage's errors propagate, transformed output
                 # threads through (validators.py:276-295)
-                viol_arr_t = (
-                    "array<struct<path:array<string>,message:string,"
-                    "error_type:string,offending:string,ctx:string>>"
-                )
-                empty_v = F.array().cast(viol_arr_t)
+                empty_v = F.array().cast(_VIOL_ARR_T)
                 cur = col
                 pending = []
                 for stage in v.validators:
@@ -1413,11 +1470,11 @@ class Schema:
                         parts = (
                             [F.when(s.isNotNull(), F.array(s))
                              .otherwise(empty_v) for s in singles]
-                            + [F.coalesce(a.cast(viol_arr_t), empty_v)
+                            + [F.coalesce(a.cast(_VIOL_ARR_T), empty_v)
                                for a in arrs]
                         )
                         pending.append(
-                            F.concat(*parts).cast(viol_arr_t)
+                            F.concat(*parts).cast(_VIOL_ARR_T)
                             if parts else empty_v
                         )
                         cur = out_c
@@ -1433,7 +1490,7 @@ class Schema:
                         )
                         pending.append(
                             F.when(sv.isNotNull(), F.array(sv))
-                            .otherwise(empty_v).cast(viol_arr_t)
+                            .otherwise(empty_v).cast(_VIOL_ARR_T)
                         )
                         cur = rc.out(cur)
                 if v.msg is not None:
@@ -1443,7 +1500,7 @@ class Schema:
                         F.lit("AllInvalid").alias("error_type"),
                         F.lit("None").alias("offending"),
                         F.lit("dictionary value").alias("ctx"),
-                    )).cast(viol_arr_t)
+                    )).cast(_VIOL_ARR_T)
                     result = empty_v
                     for a in reversed(pending):
                         result = F.when(
@@ -1739,14 +1796,8 @@ class Schema:
                 )
             )
 
-        # multi-column content checks (Arrow-batch validators)
-        for chk in extra_checks:
-            label, msg_col = chk[0], chk[1]
-            etype = chk[2] if len(chk) > 2 else "ValueInvalid"
-            err_entries.append(
-                _violation((label,), msg_col, etype, F.lit("None"),
-                           msg_col.isNotNull())
-            )
+        # the caller's multi-column content checks go here, per call
+        n_head = len(err_entries)
 
         # extra-key policy (schema_builder.py:384-396)
         extra_cols = [c for c in df.columns if c not in declared]
@@ -1764,62 +1815,19 @@ class Schema:
                 out_cols.setdefault(c, _fcol(c))
         # REMOVE_EXTRA: simply not projected
 
-        # Lambda-free assembly: array_compact/array_sort compile to
-        # higher-order functions whose lambda bodies force the ENTIRE
-        # projection out of whole-stage codegen (measured: 3-5s of
-        # interpreted per-row lambda eval on a 600k-row validate).
-        # concat of conditional singleton arrays stays inside codegen;
-        # error order = schema declaration order, which is exactly the
-        # reference's accumulation order (schema_builder.py:360-377).
-        viol_arr_t = (
-            "array<struct<path:array<string>,message:string,"
-            "error_type:string,offending:string,ctx:string>>"
-        )
-        empty = F.array().cast(viol_arr_t)
+        empty = F.array().cast(_VIOL_ARR_T)
         # map-entry violation arrays are dynamic-length: evaluate each ONCE
         # as a hidden stage-1 column (the transform/filter lambdas are the
         # expensive part), then concat by reference
         arr_refs: list[Column] = []
         for arr in err_arrays:
             a_alias = f"__ea_{len(hidden)}"
-            hidden.append(arr.cast(viol_arr_t).alias(a_alias))
+            hidden.append(arr.cast(_VIOL_ARR_T).alias(a_alias))
             arr_refs.append(F.col(a_alias))
-        if err_entries or arr_refs:
-            errors = F.concat(
-                *[
-                    F.when(en.isNotNull(), F.array(en)).otherwise(empty)
-                    for en in err_entries
-                ],
-                *[F.coalesce(a, empty) for a in arr_refs],
-            )
-        else:
-            errors = empty
-        if excl_entries or incl_entries:
-            # group-check precedence (schema_builder.py:530-571): any
-            # exclusive error preempts everything; else the first
-            # inclusive error preempts mapping errors; else fall through
-            if incl_entries:
-                first_incl = (incl_entries[0] if len(incl_entries) == 1
-                              else F.coalesce(*incl_entries))
-                errors = F.when(
-                    first_incl.isNotNull(),
-                    F.array(first_incl).cast(viol_arr_t),
-                ).otherwise(errors)
-            if excl_entries:
-                excl_arr = F.concat(*[
-                    F.when(en.isNotNull(), F.array(en)).otherwise(empty)
-                    for en in excl_entries
-                ])
-                errors = F.when(
-                    F.size(excl_arr) > 0, excl_arr
-                ).otherwise(errors)
-
-        keep_ids = [c for c in id_cols if c not in out_cols]
-        selection = (
-            [_fcol(c).alias(c) for c in keep_ids]
-            + [expr.alias(name) for name, expr in out_cols.items()]
-            + [errors.alias("__errors")]
-        )
+        wrapped = [
+            F.when(en.isNotNull(), F.array(en)).otherwise(empty)
+            for en in err_entries
+        ]
         # pass/fail as a plain boolean disjunction: each entry is
         # `when(cond, struct).otherwise(null)`, so isNotNull() == cond.
         # Used by `valid` so its filter stays inside whole-stage codegen
@@ -1829,20 +1837,24 @@ class Schema:
             fail_any = fail_any | en.isNotNull()
         for a in arr_refs:
             fail_any = fail_any | (F.size(F.coalesce(a, empty)) > 0)
-        valid_sel = (
-            [_fcol(c).alias(c) for c in keep_ids]
-            + [expr.alias(name) for name, expr in out_cols.items()]
-        )
-        stage1 = [F.col("*")] + hidden  # unbound: reusable across DataFrames
-        self._compiled_cache[memo_key] = (
-            stage1, selection, list(keep_ids) + list(out_cols),
-            fail_any, valid_sel,
-        )
-        annotated = df.select(*stage1).select(*selection)
-        valid_df = df.select(*stage1).filter(~fail_any).select(*valid_sel)
-        return ValidationResult(
-            annotated, list(id_cols), list(keep_ids) + list(out_cols),
-            valid_df,
+        keep_ids = [c for c in id_cols if c not in out_cols]
+        return _CompiledTable(
+            stage1=[F.col("*")] + hidden,  # unbound: reusable across frames
+            kept=[_fcol(c).alias(c) for c in keep_ids]
+            + [expr.alias(name) for name, expr in out_cols.items()],
+            out_names=list(keep_ids) + list(out_cols),
+            fail_any=fail_any,
+            head=wrapped[:n_head],
+            tail=wrapped[n_head:] + [F.coalesce(a, empty) for a in arr_refs],
+            first_incl=(
+                incl_entries[0] if len(incl_entries) == 1
+                else F.coalesce(*incl_entries)
+            ) if incl_entries else None,
+            excl_arr=F.concat(*[
+                F.when(en.isNotNull(), F.array(en)).otherwise(empty)
+                for en in excl_entries
+            ]) if excl_entries else None,
+            empty=empty,
         )
 
     def _validate_map(self, col: Column, dtype: T.MapType,
@@ -2155,11 +2167,7 @@ class Schema:
         branch transforms cannot merge into one statically-typed column.
 
         Returns one array<violation> Column (empty = pass)."""
-        viol_arr_t = (
-            "array<struct<path:array<string>,message:string,"
-            "error_type:string,offending:string,ctx:string>>"
-        )
-        empty = F.array().cast(viol_arr_t)
+        empty = F.array().cast(_VIOL_ARR_T)
         branch_arrays = []
         for b in v.validators:
             # Self re-enters the ROOT schema (schema_builder.py:215-216);
@@ -2184,9 +2192,9 @@ class Schema:
                     parts = [
                         F.when(e.isNotNull(), F.array(e)).otherwise(empty)
                         for e in seq_singles
-                    ] + [F.coalesce(a.cast(viol_arr_t), empty)
+                    ] + [F.coalesce(a.cast(_VIOL_ARR_T), empty)
                          for a in seq_arrs]
-                    arr = (F.concat(*parts).cast(viol_arr_t)
+                    arr = (F.concat(*parts).cast(_VIOL_ARR_T)
                            if parts else empty)
                 else:
                     arr = F.when(
@@ -2199,7 +2207,7 @@ class Schema:
                             py_repr_col(col, dtype).alias("offending"),
                             F.lit("dictionary value").alias("ctx"),
                         )),
-                    ).otherwise(empty).cast(viol_arr_t)
+                    ).otherwise(empty).cast(_VIOL_ARR_T)
                 branch_arrays.append(arr)
                 continue
             if not isinstance(b, dict):
@@ -2217,7 +2225,7 @@ class Schema:
                             py_repr_col(col, dtype).alias("offending"),
                             F.lit("dictionary value").alias("ctx"),
                         )),
-                    ).otherwise(empty).cast(viol_arr_t)
+                    ).otherwise(empty).cast(_VIOL_ARR_T)
                 )
                 continue
             # branch compiles use the combinator's OWN required= kwarg,
@@ -2245,8 +2253,8 @@ class Schema:
             parts = [
                 F.when(e.isNotNull(), F.array(e)).otherwise(empty)
                 for e in sub_errs
-            ] + [F.coalesce(a.cast(viol_arr_t), empty) for a in sub_arrays]
-            arr = F.concat(*parts).cast(viol_arr_t) if parts else empty
+            ] + [F.coalesce(a.cast(_VIOL_ARR_T), empty) for a in sub_arrays]
+            arr = F.concat(*parts).cast(_VIOL_ARR_T) if parts else empty
             branch_arrays.append(arr)
         # Union discriminant routing (validators.py:343-382): the
         # reference's canonical discriminant filters candidate branches
@@ -2336,7 +2344,7 @@ class Schema:
                 F.lit(v.error_type).alias("error_type"),
                 F.lit("None").alias("offending"),
                 F.lit("dictionary value").alias("ctx"),
-            )).cast(viol_arr_t)
+            )).cast(_VIOL_ARR_T)
         else:
             # strictly-deeper-first-error wins among CANDIDATE branches;
             # earlier branch on ties; no candidates -> AnyInvalid
@@ -2352,7 +2360,7 @@ class Schema:
                 F.lit("AnyInvalid").alias("error_type"),
                 F.lit("None").alias("offending"),
                 F.lit("dictionary value").alias("ctx"),
-            )).cast(viol_arr_t)
+            )).cast(_VIOL_ARR_T)
             best_d = F.lit(-1)
             for a, d in zip(branch_arrays, depth):
                 losing = F.when(d > best_d, a).otherwise(losing)
@@ -2375,11 +2383,7 @@ class Schema:
         Value threading between dict stages is identity (a struct column
         cannot change shape mid-expression) — same documented divergence
         as Any over dict branches."""
-        viol_arr_t = (
-            "array<struct<path:array<string>,message:string,"
-            "error_type:string,offending:string,ctx:string>>"
-        )
-        empty = F.array().cast(viol_arr_t)
+        empty = F.array().cast(_VIOL_ARR_T)
         stage_arrays = []
         for b in v.validators:
             if b is dsl.Self or b is dsl._SelfSentinel or isinstance(
@@ -2403,7 +2407,7 @@ class Schema:
                             py_repr_col(col, dtype).alias("offending"),
                             F.lit("dictionary value").alias("ctx"),
                         )),
-                    ).otherwise(empty).cast(viol_arr_t)
+                    ).otherwise(empty).cast(_VIOL_ARR_T)
                 )
                 continue
             if not isinstance(b_dict, dict):
@@ -2427,9 +2431,9 @@ class Schema:
             parts = [
                 F.when(e.isNotNull(), F.array(e)).otherwise(empty)
                 for e in sub_errs
-            ] + [F.coalesce(a.cast(viol_arr_t), empty) for a in sub_arrays]
+            ] + [F.coalesce(a.cast(_VIOL_ARR_T), empty) for a in sub_arrays]
             stage_arrays.append(
-                F.concat(*parts).cast(viol_arr_t) if parts else empty
+                F.concat(*parts).cast(_VIOL_ARR_T) if parts else empty
             )
         if v.msg is not None:
             losing = F.array(F.struct(
@@ -2438,7 +2442,7 @@ class Schema:
                 F.lit("AllInvalid").alias("error_type"),
                 F.lit("None").alias("offending"),
                 F.lit(None).cast("string").alias("ctx"),
-            )).cast(viol_arr_t)
+            )).cast(_VIOL_ARR_T)
             result = empty
             for a in reversed(stage_arrays):
                 result = F.when(F.size(a) > 0, losing).otherwise(result)
@@ -2731,10 +2735,6 @@ class Schema:
         Returns (out_col, single_errs, err_arrays)."""
         elem_t = dtype.elementType
         sub = Schema(schema_dict, required=self.required, extra=self.extra)
-        viol_arr_t = (
-            "array<struct<path:array<string>,message:string,"
-            "error_type:string,offending:string,ctx:string>>"
-        )
 
         out_col = F.when(
             col.isNotNull(),
@@ -2753,14 +2753,14 @@ class Schema:
             parts = []
             if errs:
                 parts.append(F.filter(
-                    F.array(*errs).cast(viol_arr_t),
+                    F.array(*errs).cast(_VIOL_ARR_T),
                     lambda s: s.isNotNull(),
                 ))
             for arr in nested:
-                parts.append(F.coalesce(arr.cast(viol_arr_t),
-                                        F.array().cast(viol_arr_t)))
+                parts.append(F.coalesce(arr.cast(_VIOL_ARR_T),
+                                        F.array().cast(_VIOL_ARR_T)))
             if not parts:
-                return F.array().cast(viol_arr_t)
+                return F.array().cast(_VIOL_ARR_T)
             return F.concat(*parts) if len(parts) > 1 else parts[0]
 
         arr = F.when(

@@ -6,8 +6,54 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-class cache (static conf, default 100 entries, LRU).
+# One clips-suite run uses ~110-150 distinct classes, so at 100 the cache
+# evicted each class before its next use and every warm run recompiled
+# them all (measured: a traced perfbench clips_suite run, 800 clips,
+# made 1146 Janino compiles; two runs over a 400-clip table 108, then
+# 110). At 1000 the traced run makes 376 and the second 400-clip run 0.
+CODEGEN_CACHE_ENTRIES = 1000
 
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEMORY", "24g")
+
+def _host_memory_mb() -> int:
+    """The cgroup memory limit when one is set, else MemTotal."""
+    with open("/proc/meminfo") as f:
+        total = next(int(line.split()[1]) // 1024 for line in f
+                     if line.startswith("MemTotal:"))
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw) // (1 << 20))
+        break
+    return total
+
+
+def _to_mb(size: str) -> int:
+    """JVM size string ('6g', '1920m', '512k', bare bytes) in MB."""
+    size = size.strip().lower().rstrip("b")
+    mult = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1 << 20}
+    if size and size[-1] in mult:
+        return int(float(size[:-1]) * mult[size[-1]])
+    return int(size) >> 20
+
+
+def memory_plan(
+    total_mb: int, driver: str | None = None, offheap: str | None = None
+) -> tuple[str, str, bool]:
+    """(driver heap, off-heap size, pre-touch) for a host with
+    ``total_mb`` of memory. Heap is 45% of it and off-heap 20%, capped at
+    the 24g/16g these defaults were tuned with; explicit ``driver`` /
+    ``offheap`` sizes (SPARK_DRIVER_MEMORY / SPARK_OFFHEAP_MEMORY) win.
+    The heap is pre-touched only when it is at most a quarter of the
+    host's memory, so a pre-faulted heap never crowds out the rest."""
+    driver = driver or f"{min(24 << 10, total_mb * 45 // 100)}m"
+    offheap = offheap or f"{min(16 << 10, total_mb // 5)}m"
+    return driver, offheap, _to_mb(driver) <= total_mb // 4
 
 
 def get_spark(
@@ -27,6 +73,15 @@ def get_spark(
       override via spark.sql.shuffle.partitions / AQE coalescing).
     """
     master = master or os.environ.get("SPARK_MASTER", None)
+    driver_mem, offheap_mem, pretouch = memory_plan(
+        _host_memory_mb(),
+        os.environ.get("SPARK_DRIVER_MEMORY"),
+        os.environ.get("SPARK_OFFHEAP_MEMORY"),
+    )
+    # Xms=Xmx + AlwaysPreTouch pre-faults the heap once (see below)
+    heap_opts = (f"-Xms{driver_mem} -XX:G1HeapRegionSize=32m"
+                 " -XX:+AlwaysPreTouch" if pretouch
+                 else "-XX:G1HeapRegionSize=32m")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     b = SparkSession.builder.appName(app_name)
     if master:
@@ -48,6 +103,7 @@ def get_spark(
         # rows; at cluster scale tune with row-group size instead
         "spark.sql.files.maxPartitionBytes": "64m",
         "spark.sql.session.timeZone": "UTC",
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         # PySpark 4 wraps EVERY Column/DataFrame API call with call-site
         # capture for error context: a Python stack walk plus THREE extra
         # py4j round trips per call (conf.get + origin set/clear). The
@@ -79,7 +135,7 @@ def get_spark(
         # local mode: the driver heap IS the executor heap; 32 concurrent
         # tasks each buffering multi-MB audio batches need real headroom
         # (8g produced GCLocker allocation stalls at local[32])
-        "spark.driver.memory": _DRIVER_MEM,
+        "spark.driver.memory": driver_mem,
         # Binary-column scans: the vectorized reader's default 4096-row
         # columnar batch over 30-300KB audio payloads is a 100MB+ on-heap
         # array — a G1 "humongous" allocation at any region size. At 32
@@ -91,7 +147,9 @@ def get_spark(
         # Xms=Xmx + AlwaysPreTouch pre-faults the heap once — this VM's
         # kernel page-fault path is expensive (sys time 6x user time
         # measured), so faulting pages at allocation time serializes the
-        # executors.
+        # executors. Only when the heap is small next to the host's
+        # memory (``memory_plan``): a 24g pre-touched heap aborts the JVM
+        # on a 15 GB host.
         "spark.sql.parquet.columnarReaderBatchSize": "64",
         # Off-heap column vectors: binary audio batches are decoded into
         # unsafe memory instead of byte[] churn in the G1 young gen —
@@ -100,10 +158,8 @@ def get_spark(
         # the standard config for scan-heavy executors.
         "spark.sql.columnVector.offheap.enabled": "true",
         "spark.memory.offHeap.enabled": "true",
-        "spark.memory.offHeap.size":
-            os.environ.get("SPARK_OFFHEAP_MEMORY", "16g"),
-        "spark.driver.extraJavaOptions":
-            f"-Xms{_DRIVER_MEM} -XX:G1HeapRegionSize=32m -XX:+AlwaysPreTouch",
+        "spark.memory.offHeap.size": offheap_mem,
+        "spark.driver.extraJavaOptions": heap_opts,
         # cluster deployments: the same flags go on the executors
         "spark.executor.extraJavaOptions":
             "-XX:G1HeapRegionSize=32m -XX:+AlwaysPreTouch",

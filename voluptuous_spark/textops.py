@@ -182,39 +182,23 @@ def ngram_jaccard_pairs(
 
 def _dense_ranks(values: DataFrame, col: str, buckets: int = 64) -> DataFrame:
     """(col, rank): dense 1-based ranks by ascending ``col`` — numerically
-    identical to ``row_number() over (order by col)`` but WITHOUT the
+    identical to ``dense_rank() over (order by col)`` but WITHOUT the
     single-partition global window (WindowExec with no partition key moves
     the whole dictionary to one task — a non-starter for a 10^12-row
     corpus's shingle dictionary). Plan: bucket the distinct values by
-    DETERMINISTIC literal range bounds (``partitioning`` — a hash-ordered
-    sample collected once to the driver), rank locally per bucket, add
-    per-bucket offsets (a tiny driver-side cumulative sum over
-    ``buckets`` counts). Because the bucket id is a pure literal
-    expression, the offsets job and the consuming job agree by
-    construction — no cache needed (the old repartitionByRange form
-    cached the dictionary for bound consistency and never released it)."""
-    from .partitioning import range_pid_expr, sample_range_bounds
+    DETERMINISTIC literal range bounds, rank locally per bucket, and add
+    the count of every lower bucket (``partitioning.with_range_offsets``:
+    one eager bounds sample, offsets computed in the plan). Nothing is
+    cached: every job derives the same bucket from the same literal
+    bounds. An empty input gives zero rows."""
+    from .partitioning import PID, with_range_offsets
 
-    d = values.select(col).distinct()
-    bounds = sample_range_bounds(d, col, buckets)
-    d = d.withColumn("__pid", range_pid_expr(F.col(col), bounds))
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in d.groupBy("__pid").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off = F.create_map(
-        *[F.lit(v) for kv in sorted(offsets.items()) for v in kv]
-    ) if offsets else F.create_map()
-    w = Window.partitionBy("__pid").orderBy(col)
+    d = with_range_offsets(
+        values.select(col).distinct(), col, {"n": F.count(F.lit(1))}, buckets
+    )
+    w = Window.partitionBy(PID).orderBy(col)
     return d.select(
-        col,
-        (F.row_number().over(w) + off[F.col("__pid")]).alias("rank"),
+        col, (F.row_number().over(w) + F.col("off_n")).alias("rank")
     )
 
 
